@@ -9,11 +9,11 @@ windows) the north star mandates.
 Design rules (see SURVEY.md §7):
 - DataFrame/SQL first; Catalyst plans everything; RDDs nowhere.
 - Bloom filters are packed ``array<long>`` bit words, built with
-  per-partition partial bitsets OR-merged JVM-side — never a
+  per-partition partial bitsets OR-merged per key — never a
   ``collect_list`` of indexes (the reference's ``extend_list`` concat
   is the anti-pattern this replaces).
 - Broadcast joins for small dims / filter tables; AQE on.
-- Python only in Arrow-batched ``applyInPandas``/``mapInPandas``,
+- Python only in Arrow-batched ``applyInPandas``/``mapInPandas``/``mapInArrow``,
   never row-at-a-time UDFs in a hot path.
 """
 

@@ -18,16 +18,16 @@ Spark-first design decisions (vs. the reference's RDD/MR pipeline):
   (8× smaller than the reference's list[bool] pickle,
   bloomfilters_builder.py:100), directly broadcastable and mergeable
   with JVM-side bitwise OR.
-- **Build = map-side partial bitsets, OR-merged.** The reference
+- **Build = counts, one map-side fold, one merge.** The reference
   concatenates per-key index lists in the reduce (``extend_list``,
   bloomfilters_builder.py:44-54) — O(n·k) ints shuffled per key, the
   anti-pattern at 100 TB. Here every *input partition* folds its rows
   into one partial bitset per key inside a single Arrow/numpy pass
-  (``mapInPandas`` — the DataFrame analogue of a map-side combiner),
-  so NO raw rows are ever shuffled: only O(partitions · keys) packed
-  bitsets move, and they are OR-merged with a JVM
-  ``aggregate``/``zip_with`` expression in two levels so no single
-  task collects an unbounded partial list.
+  (``mapInArrow`` — the DataFrame analogue of a map-side combiner),
+  so NO raw rows are ever shuffled: only O(partitions · keys) partials
+  move, in one shuffle by key. Each merge task ORs the partials of the
+  keys it owns into one accumulator per key as they stream in, and
+  emits the finished rows.
 - **Probe = broadcast hash join** (the J1/J2 collapse): filters are a
   tiny table (one row per key), so ``probe.join(broadcast(filters))``
   replaces both the reference's driver-collect-and-broadcast
@@ -37,16 +37,14 @@ Spark-first design decisions (vs. the reference's RDD/MR pipeline):
 Scale ledger (1000 executors, 100 TB input): per-row work is
 whole-stage-codegen'd hashing; shuffle bytes per (partition, key) =
 min(m/8, 8·k·rows_in_partition) — partials switch to sparse index
-arrays below half-density, so thin partition/key slices no longer pay
-the dense m/8 (the r4 fix for the "n_keys × m/8 per task" memory
-cliff; forced-representation property tests pin bit-identical output).
+arrays below half-density, so thin partition/key slices do not pay the
+dense m/8 (forced-representation tests pin bit-identical output).
 Driver holds one (key, count) row per key (same assumption as the
 reference's 10 ratings — per-key filters only make sense for
-low-cardinality keys). Peak task memory = Σ_keys min(m/8, 8·indexes)
-for the fold; the full dense bitset is allocated once per key, in the
-final one-row-per-key stage that IS the output. For m beyond a few
-hundred MB per key, raise ``merge_fanout`` so level-1 merge groups
-stay within executor memory.
+low-cardinality keys). Peak fold-task memory = Σ_keys min(m/8,
+8·indexes); peak merge-task memory = Σ m/8 over the keys that task
+owns, which is the size of its output. The dense bitset of a key is
+allocated once, in the merge task that emits it.
 """
 
 from __future__ import annotations
@@ -55,6 +53,8 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -90,118 +90,126 @@ def hash_indexes_col(value_col, m_col, k: int):
     )
 
 
-def _densify(nwords: int, idx: np.ndarray) -> np.ndarray:
-    words = np.zeros(nwords, dtype=np.int64)
+def _set_bits(words: np.ndarray, idx: np.ndarray) -> None:
     np.bitwise_or.at(words, idx >> 6, np.int64(1) << (idx & 63))
-    return words
+
+
+def _by_key(keys: pa.Array, lists: pa.ListArray) -> Iterator[tuple[str, np.ndarray]]:
+    """(key, values) for each key of one Arrow batch: the concatenated
+    contents of that key's non-null lists, read as numpy straight from
+    the list column's offsets and values buffers."""
+    enc = pc.dictionary_encode(keys)
+    offsets = lists.offsets.to_numpy()
+    valid = lists.is_valid().to_numpy(zero_copy_only=False)
+    codes = np.repeat(np.where(valid, enc.indices.to_numpy(), -1), np.diff(offsets))
+    values = lists.values.to_numpy()[offsets[0] : offsets[-1]]
+    keep = codes >= 0
+    codes, values = codes[keep], values[keep]
+    bounds = np.cumsum(np.bincount(codes, minlength=len(enc.dictionary)))[:-1]
+    parts = np.split(values[np.argsort(codes, kind="stable")], bounds)
+    for key, part in zip(enc.dictionary.to_pylist(), parts):
+        if len(part):
+            yield key, part
+
+
+def _list_array(parts: list[np.ndarray | None]) -> pa.ListArray:
+    """list<int64> column from int64 arrays; None becomes a null list.
+    Empties `parts` while copying, so the column plus one source array
+    is the most that is alive at once."""
+    offsets = np.zeros(len(parts) + 1, dtype=np.int32)
+    np.cumsum([0 if a is None else len(a) for a in parts], out=offsets[1:])
+    mask = pa.array([a is None for a in parts])
+    values = np.empty(offsets[-1], dtype=np.int64)
+    for i in range(len(parts)):
+        a, parts[i] = parts[i], None
+        if a is not None:
+            values[offsets[i] : offsets[i + 1]] = a
+    return pa.ListArray.from_arrays(pa.array(offsets), pa.array(values), mask=mask)
 
 
 def _partition_partials(m_by_key: dict[str, int], k: int, representation: str = "auto"):
-    """mapInPandas body: fold a whole input partition into one partial
+    """mapInArrow body: fold a whole input partition into one partial
     per key seen — numpy over Arrow batches, no per-row Python, no
-    shuffle of raw rows.
+    shuffle of raw rows. Emits _PARTIAL_SCHEMA batches.
 
     Representation is chosen PER (partition, key), adaptively: start
     sparse (append raw index arrays) and densify the accumulator the
     moment the index count passes nwords/2 — so peak task memory is
-    min(m/8, 8·indexes_so_far) per key, never the unconditional
-    n_keys × m/8 of the r3 fold (the SCALING.md cliff for GB-scale m).
-    `representation` forces "dense"/"sparse" for tests and for
-    deployments that know their shape."""
+    min(m/8, 8·indexes_so_far) per key, never an unconditional
+    n_keys × m/8. `representation` forces "dense"/"sparse" for tests
+    and for deployments that know their shape."""
 
-    def fold(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fold(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # key -> ["dense", words] | ["sparse", [idx arrays], n_indexes]
         acc: dict[str, list] = {}
-        for pdf in batches:
-            for key, grp in pdf.groupby("__key", sort=False):
-                m = m_by_key.get(key)
-                if m is None:
-                    continue
-                nwords = (m + 63) >> 6
-                idx = np.concatenate(grp["__indexes"].to_numpy())
+        for batch in batches:
+            for key, idx in _by_key(batch.column(0), batch.column(1)):
+                nwords = (m_by_key[key] + 63) >> 6
                 cur = acc.get(key)
                 if cur is None:
                     cur = acc[key] = ["sparse", [], 0]
                     if representation == "dense":
                         cur[:] = ["dense", np.zeros(nwords, dtype=np.int64)]
-                if cur[0] == "dense":
-                    np.bitwise_or.at(cur[1], idx >> 6, np.int64(1) << (idx & 63))
-                else:
+                if cur[0] == "sparse":
                     cur[1].append(idx)
                     cur[2] += len(idx)
-                    if representation != "sparse" and cur[2] > (nwords >> 1):
-                        cur[:] = ["dense", _densify(nwords, np.concatenate(cur[1]))]
+                    if representation == "sparse" or cur[2] <= (nwords >> 1):
+                        continue
+                    idx = np.concatenate(cur[1])
+                    cur[:] = ["dense", np.zeros(nwords, dtype=np.int64)]
+                _set_bits(cur[1], idx)
         if acc:
-            keys, words, idxs = [], [], []
-            for key, cur in acc.items():
-                keys.append(key)
-                if cur[0] == "dense":
-                    words.append(cur[1].tolist())
-                    idxs.append(None)
-                else:
-                    words.append(None)
-                    idxs.append(np.unique(np.concatenate(cur[1])).tolist())
-            yield pd.DataFrame({"key": keys, "words": words, "idxs": idxs})
+            keys = list(acc)
+            words = [cur[1] if cur[0] == "dense" else None for cur in acc.values()]
+            idxs = [
+                None if cur[0] == "dense" else np.unique(np.concatenate(cur[1]))
+                for cur in acc.values()
+            ]
+            acc.clear()
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(keys, pa.string()), _list_array(words), _list_array(idxs)],
+                names=["key", "words", "idxs"],
+            )
 
     return fold
 
 
-def _or_merge(partials: DataFrame, extra_group: list[str] | None = None) -> DataFrame:
-    """OR-merge partials per key (plus optional salt columns) with
-    pure-JVM aggregates, keeping the two representations separate:
-    dense partials fold with zip_with bitwise-OR, sparse partials with
-    a flatten + distinct set-union (sorted for a canonical form).
-    collect_list skips nulls, so each side sees only its own rows; the
-    `if` guards keep the empty-side result NULL (wlist[0] on an empty
-    list would be an ANSI error). Sparse stays sparse through both
-    merge levels — union size is bounded by the key's total distinct
-    set bits, which is ≤ m by definition and ≪ m whenever sparse was
-    chosen — and is densified exactly once per key in _finalize."""
-    group = ["key", *(extra_group or [])]
-    return (
-        partials.groupBy(*group)
-        .agg(
-            F.collect_list("words").alias("wlist"),
-            F.collect_list("idxs").alias("ilist"),
-        )
-        .select(
-            *group,
-            F.expr(
-                "if(size(wlist) = 0, cast(null as array<bigint>),"
-                " aggregate(slice(wlist, 2, greatest(size(wlist) - 1, 0)), wlist[0],"
-                " (acc, w) -> zip_with(acc, w, (a, b) -> a | b)))"
-            ).alias("words"),
-            F.expr(
-                "if(size(ilist) = 0, cast(null as array<bigint>),"
-                " array_sort(array_distinct(flatten(ilist))))"
-            ).alias("idxs"),
-        )
-    )
+def _merge_partials(n_by_key: dict[str, int], m_by_key: dict[str, int], k: int):
+    """mapInArrow body after the shuffle by key: OR every partial of
+    each key this task owns into one dense accumulator per key as the
+    batches stream in — dense partials word-wise, sparse ones by
+    scattering their indexes — then emit the FILTER_SCHEMA rows. The
+    accumulators are the task's output: it holds Σ m/8 over its own
+    keys, and emitting moves them into the output column one at a time."""
 
+    def merge(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        acc: dict[str, np.ndarray] = {}
+        for batch in batches:
+            keys, dense, sparse = batch.columns
+            for col in (dense, sparse):
+                for key, part in _by_key(keys, col):
+                    words = acc.get(key)
+                    if words is None:
+                        words = acc[key] = np.zeros((m_by_key[key] + 63) >> 6, dtype=np.int64)
+                    if col is dense:
+                        words |= np.bitwise_or.reduce(part.reshape(-1, len(words)), axis=0)
+                    else:
+                        _set_bits(words, part)
+        if acc:
+            keys, words = list(acc), list(acc.values())
+            acc.clear()
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(keys, pa.string()),
+                    pa.array([n_by_key[x] for x in keys], pa.int64()),
+                    pa.array([m_by_key[x] for x in keys], pa.int64()),
+                    pa.array([k] * len(keys), pa.int32()),
+                    _list_array(words),
+                ],
+                names=["key", "n", "m", "k", "words"],
+            )
 
-def _finalize(m_by_key: dict[str, int]):
-    """mapInPandas body for the last stage: one row per key arrives
-    with (words?, idxs?); scatter the sparse indexes into the dense
-    bitset (allocating it only here — the single place the full m/8
-    bytes must exist, because it IS the output)."""
-
-    def combine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for key, words, idxs in zip(pdf["key"], pdf["words"], pdf["idxs"]):
-                nwords = (m_by_key[key] + 63) >> 6
-                w = (
-                    np.asarray(words, dtype=np.int64)
-                    if words is not None
-                    else np.zeros(nwords, dtype=np.int64)
-                )
-                if idxs is not None:
-                    idx = np.asarray(idxs, dtype=np.int64)
-                    np.bitwise_or.at(w, idx >> 6, np.int64(1) << (idx & 63))
-                out.append(w.tolist())
-            yield pd.DataFrame({"key": pdf["key"], "words": out})
-
-    return combine
+    return merge
 
 
 def _indexes_col(value_col, m_col, k: int, flavor: str):
@@ -223,7 +231,6 @@ def build_bloom_filters(
     value_col: str,
     p: float,
     *,
-    merge_fanout: int = 64,
     flavor: str = "spark-murmur3",
     representation: str = "auto",
 ) -> DataFrame:
@@ -233,13 +240,15 @@ def build_bloom_filters(
     Stage 1 (driver): per-key counts → (n, m, k). This is the
     reference's linecount job (util/count-number-of-keys.py:33-38)
     folded into groupBy().count() + a one-row-per-key collect.
-    Stage 2: hash every row (codegen) and fold each input partition
-    into per-key partials (Arrow batches, numpy) — adaptively dense
-    bitsets or sparse index arrays (see _partition_partials;
-    `representation` forces one for tests/known shapes).
-    Stage 3: two-level JVM OR-merge (partition-id salt, then key),
-    then one bounded mapInPandas row per key densifies the sparse
-    remainder into the output bitset.
+    Stage 2 (fold): hash every row (codegen; m per row from a broadcast
+    join of the sizes) and fold each input partition into per-key
+    partials in one mapInArrow pass — adaptively dense bitsets or
+    sparse index arrays (see _partition_partials; `representation`
+    forces one for tests/known shapes).
+    Stage 3 (merge): one shuffle by key, then one mapInArrow pass ORs
+    each key's partials into a streaming per-key accumulator and emits
+    the final row (see _merge_partials). Peak merge-task memory is
+    Σ m/8 over the keys that task owns — the size of its output.
     """
     spark = df.sparkSession
     k = num_hashes(p)
@@ -255,8 +264,7 @@ def build_bloom_filters(
     n_by_key = {r["__key"]: int(r["count"]) for r in counts}
 
     sizes = spark.createDataFrame(
-        [(kk, n_by_key[kk], int(m)) for kk, m in m_by_key.items()],
-        "__key string, n bigint, m bigint",
+        [(kk, int(m)) for kk, m in m_by_key.items()], "__key string, m bigint"
     )
 
     hashed = keyed.join(F.broadcast(sizes), "__key").select(
@@ -271,28 +279,12 @@ def build_bloom_filters(
     if keyed.rdd.getNumPartitions() < target:
         hashed = hashed.repartition(target)
 
-    partials = hashed.mapInPandas(
+    partials = hashed.mapInArrow(
         _partition_partials(m_by_key, k, representation), _PARTIAL_SCHEMA
     )
-
-    # Two-level merge keeps any single collect_list bounded: level 1
-    # groups by (key, partition_id % fanout), level 2 by key alone.
-    level1 = _or_merge(
-        partials.withColumn("__salt", F.spark_partition_id() % merge_fanout),
-        ["__salt"],
+    return partials.repartition("key").mapInArrow(
+        _merge_partials(n_by_key, m_by_key, k), FILTER_SCHEMA
     )
-    merged = _or_merge(level1.select("key", "words", "idxs")).mapInPandas(
-        _finalize(m_by_key), "key string, words array<long>"
-    )
-
-    return merged.join(
-        F.broadcast(
-            sizes.select(
-                F.col("__key").alias("key"), "n", "m", F.lit(k).cast("int").alias("k")
-            )
-        ),
-        "key",
-    ).select("key", "n", "m", "k", "words")
 
 
 # Probe expression: all k hash positions set ⇒ membership "maybe".
@@ -451,13 +443,13 @@ def build_bloom_filters_sql(
     Scale shape: the explode emits n·k (key, word_idx, bit) rows, but
     HashAggregate's map-side partial BIT_OR collapses them to at most
     n_keys × m/64 rows per input partition before the shuffle — the
-    same shuffle bound as the mapInPandas fold, with whole-stage
+    same shuffle bound as the mapInArrow fold, with whole-stage
     codegen end to end and no Python worker processes.
 
     Produces bit-identical output to build_bloom_filters (tested).
 
-    MEASURED: at 3M rows this is ~16× slower than the mapInPandas
-    fold (35 s vs 2.2 s warm on local[32]) — per-row HashAggregate
+    MEASURED: at 3M rows this is ~16× slower than the fold in its
+    mapInPandas form (35 s vs 2.2 s warm on local[32]) — per-row HashAggregate
     work on the n·k exploded rows loses to numpy's vectorized
     bitwise_or over Arrow batches, even though both shuffle the same
     bytes. Kept as the no-Python-workers alternative (e.g. a

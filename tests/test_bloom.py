@@ -200,7 +200,7 @@ def test_sparse_partials_shrink_shuffle(spark, orders):
     # key's rows, the normal shape on a many-executor cluster. Force
     # that shape here (256 slices of the tiny smoke table).
     hashed = hashed.repartition(256)
-    partials = hashed.mapInPandas(
+    partials = hashed.mapInArrow(
         _partition_partials(m_by_key, k, "auto"),
         "key string, words array<long>, idxs array<long>",
     ).collect()
@@ -219,6 +219,89 @@ def test_sparse_partials_shrink_shuffle(spark, orders):
     for r in partials:
         if r["idxs"] is not None:
             assert list(r["idxs"]) == sorted(set(r["idxs"]))  # canonical form
+
+
+def test_build_invariant_to_partitioning_and_representation(spark, orders):
+    """The fold and the merge must not change a single bit with the
+    input partitioning (1, 4, 200), the forced partial representation
+    or the key cardinality (5 priorities, 150 customers): every case
+    equals a driver-side numpy OR of the collected per-row hash
+    indexes. The Hadoop flavor is checked against the pure-Python
+    Hadoop hash the same way."""
+    import numpy as np
+
+    from mrbf_spark.bloom.core import hash_indexes_col, num_bits, num_hashes
+    from mrbf_spark.bloom.hadoop_flavor import hadoop_hash_indexes
+
+    p = 0.01
+    k = num_hashes(p)
+    for key_col in ("o_orderpriority", "o_custkey"):
+        rows = orders.select(
+            F.col(key_col).cast("string").alias("key"),
+            F.col("o_orderkey").cast("string").alias("value"),
+        ).collect()
+        n_by_key: dict[str, int] = {}
+        for r in rows:
+            n_by_key[r["key"]] = n_by_key.get(r["key"], 0) + 1
+        m_by_key = {kk: num_bits(n, p) for kk, n in n_by_key.items()}
+        sized = spark.createDataFrame(
+            [(r["key"], r["value"], int(m_by_key[r["key"]])) for r in rows],
+            "key string, value string, m bigint",
+        )
+        spark_indexes = sized.select(
+            "key", hash_indexes_col(F.col("value"), F.col("m"), k).alias("idx")
+        ).collect()
+        hadoop_indexes = [
+            (r["key"], hadoop_hash_indexes(r["value"], m_by_key[r["key"]], k)) for r in rows
+        ]
+
+        def or_table(indexes):
+            words = {kk: np.zeros((m + 63) >> 6, dtype=np.int64) for kk, m in m_by_key.items()}
+            for kk, idx in indexes:
+                idx = np.asarray(idx, dtype=np.int64)
+                np.bitwise_or.at(words[kk], idx >> 6, np.int64(1) << (idx & 63))
+            return {
+                kk: (n_by_key[kk], m_by_key[kk], k, w.tolist()) for kk, w in words.items()
+            }
+
+        expected = {
+            "spark-murmur3": or_table((r["key"], r["idx"]) for r in spark_indexes),
+            "hadoop-murmur2": or_table(hadoop_indexes),
+        }
+        for parts in (1, 4, 200):
+            df = orders.repartition(parts)
+            for flavor, rep in (
+                ("spark-murmur3", "sparse"),
+                ("spark-murmur3", "dense"),
+                ("hadoop-murmur2", "auto"),
+            ):
+                got = {
+                    r["key"]: (r["n"], r["m"], r["k"], r["words"])
+                    for r in build_bloom_filters(
+                        df, key_col, "o_orderkey", p, flavor=flavor, representation=rep
+                    ).collect()
+                }
+                assert got == expected[flavor], (key_col, parts, flavor, rep)
+
+
+def test_build_job_count(spark, orders):
+    """One action over a build starts at most 6 Spark jobs on a
+    4-partition input: the per-key counts (shuffle + collect), the
+    sizes table for the broadcast join, the guard's repartition, the
+    fold with its shuffle by key, and the merge."""
+    sc = spark.sparkContext
+    four = orders.repartition(4).cache()
+    four.count()
+    group = "test_build_job_count"
+    sc.setJobGroup(group, "bloom build")
+    try:
+        build_bloom_filters(four, "o_orderpriority", "o_orderkey", 0.01).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        four.unpersist()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 0 < len(jobs) <= 6, jobs
 
 
 def test_probe_nonbroadcast_path(spark, orders, monkeypatch):
